@@ -1,0 +1,33 @@
+package graft.perfbench
+
+/** Minimal JSON writer for the run record the Python side reads. */
+object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def num(d: Double): String =
+    if (d.isNaN || d.isInfinite) "null" else if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString
+
+  def apply(v: Any): String = v match {
+    case null => "null"
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case i: Int => i.toString
+    case l: Long => l.toString
+    case d: Double => num(d)
+    case f: Float => num(f.toDouble)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => str(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(apply).mkString("[", ",", "]")
+    case a: Array[_] => a.map(apply).mkString("[", ",", "]")
+    case o: Option[_] => o.fold("null")(apply)
+    case other => str(other.toString)
+  }
+}
