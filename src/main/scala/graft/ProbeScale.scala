@@ -8,10 +8,12 @@ import graft.operators.Vectors
 /** Measurement main for the multi-probe kNN family at growing cell count
   * C (VERDICT r06 items 1 + 7): pins that the fused TopProbeLabels /
   * TopProbeLabelsHier expressions hold PLAN size (and with it analysis
-  * time) flat in C where the unrolled one-literal-per-cell formulation
-  * grows linearly, and that the mph hierarchy's wall-clock gap over flat
+  * time) flat in C, and that the mph hierarchy's wall-clock gap over flat
   * mp widens with C as designed. Emits one JSON line per C to stdout and
-  * `probe_scale.json`.
+  * `probe_scale.json`. The committed artifact also carries the
+  * `*_unrolled` columns of the one-literal-per-cell formulation, which
+  * grew linearly in C; that formulation now exists only as the reference
+  * in DedupVectorsSpec, so this main no longer measures it.
   *
   * Corpus: synthetic deterministic embeddings with C cells × `blockSize`
   * vectors per cell — block size FIXED so total rows grow with C exactly
@@ -69,21 +71,15 @@ object ProbeScale {
       // warm EVERY variant once so one-time analyzer/codegen/classloading
       // cost never lands in any variant's first timed build
       Vectors.knnJoinMultiProbe(emb, k = 5, nProbe = 2).queryExecution.executedPlan
-      Vectors.knnJoinMultiProbe(emb, k = 5, nProbe = 2, unrolled = true).queryExecution.executedPlan
       Vectors.knnJoinMultiProbeHier(emb, k = 5, nProbe = 2, superProbe = 2).queryExecution.executedPlan
       val (bExpr, pExpr) = timePlan(Vectors.knnJoinMultiProbe(emb, k = 5, nProbe = 2))
-      val (bUnr, pUnr) = timePlan(Vectors.knnJoinMultiProbe(emb, k = 5, nProbe = 2, unrolled = true))
       val (bHier, pHier) = timePlan(Vectors.knnJoinMultiProbeHier(emb, k = 5, nProbe = 2, superProbe = 2))
-      // execution wall: expression paths only (the unrolled projection is
-      // interpreted per-row — the r6-documented scale-killer this tool
-      // exists to show the plans escaped; at C=1000 it would dominate the
-      // whole run)
       val runMp = timeRun(Vectors.knnJoinMultiProbe(emb, k = 5, nProbe = 2))
       val runMph = timeRun(Vectors.knnJoinMultiProbeHier(emb, k = 5, nProbe = 2, superProbe = 2))
       emb.unpersist()
       val line = s"""{"cells":$c,"rows":$rows,"block_size":$blockSize,""" +
-        s""""plan_ms_expr":$pExpr,"plan_ms_unrolled":$pUnr,"plan_ms_hier_expr":$pHier,""" +
-        s""""build_ms_expr":$bExpr,"build_ms_unrolled":$bUnr,"build_ms_hier_expr":$bHier,""" +
+        s""""plan_ms_expr":$pExpr,"plan_ms_hier_expr":$pHier,""" +
+        s""""build_ms_expr":$bExpr,"build_ms_hier_expr":$bHier,""" +
         s""""run_s_mp":${Actions.fmt(runMp, 2)},"run_s_mph":${Actions.fmt(runMph, 2)}}"""
       println(line)
       line

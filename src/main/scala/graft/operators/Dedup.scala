@@ -1021,20 +1021,13 @@ object Dedup {
   // ---- #42 embedding cosine near-dup ---------------------------------------
   /** Same-label block join (the label is the blocking key — at 100 TB this
     * is the IVF cell / LSH bucket), sequential-fold dot products so both
-    * engines produce identical doubles.
+    * engines produce identical doubles: the unordered pairs
+    * (`vec_a < vec_b`) of the shared core [[Vectors.blockPairs]] at or
+    * above `minCos`. No validity filter — the oracle reads the raw table.
     */
   def embedNearDup(embeddings: DataFrame, minCos: Double = 0.3): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm2}
-    val withNorm = embeddings.select(col("vec_id"), col("label"), col("embedding").as("v"),
-      vecNorm2(col("embedding")).as("n2"))
-    // spread the streamed side when the other will broadcast — see
-    // Vectors.spreadIfBroadcastJoin (a 1-row-group small corpus would
-    // otherwise run the whole pair enumeration at scan parallelism)
-    Vectors.spreadIfBroadcastJoin(withNorm, withNorm).as("a")
-      .join(withNorm.as("b"), col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .filter(col("cosine") >= minCos)
+    val e = Vectors.normed(embeddings)
+    Vectors.blockPairs(e, e, e, "label", _ < _).filter(col("cosine") >= minCos)
   }
 
   // ---- #86 line-level (segment) dedup ---------------------------------------
@@ -1101,15 +1094,6 @@ object Dedup {
        |  CAST(COUNT(*) FILTER (WHERE dup) AS BIGINT) AS n_dropped
        | FROM flagged GROUP BY 1""".stripMargin.replace("\n", "")
 
-  def embedNearDupSql(minCos: Double = 0.3, src: String = "embeddings"): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    def n2(a: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($a.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  ${flSql(s"${dot("a", "b")} / (sqrt(${n2("a")}) * sqrt(${n2("b")}))", 6)} AS cosine
-       | FROM $src a JOIN $src b
-       |  ON a.label = b.label AND a.vec_id < b.vec_id
-       | WHERE ${flSql(s"${dot("a", "b")} / (sqrt(${n2("a")}) * sqrt(${n2("b")}))", 6)} >= $minCos""".stripMargin.replace("\n", "")
-  }
+  def embedNearDupSql(minCos: Double = 0.3, src: String = "embeddings"): String =
+    s"${Vectors.blockPairsSql(src, "<")} WHERE ${Vectors.cosSql("a", "b")} >= $minCos"
 }

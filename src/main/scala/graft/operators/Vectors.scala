@@ -31,7 +31,7 @@ object Vectors {
     embeddings.filter(col("vec_id") === qId)
       .select(transform(col("embedding"), x => x.cast("double")).as("qv"))
 
-  private def cosTo(v: Column, q: Column): Column = {
+  private[graft] def cosTo(v: Column, q: Column): Column = {
     // codegen'd strict-fold dot product (graft.functions.DotProduct) — the
     // zip_with/aggregate formulation is interpreted per element
     def dot(a: Column, b: Column) = graft.functions.VectorFunctions.vecDot(a, b)
@@ -221,18 +221,6 @@ object Vectors {
   }
 
   // ---- #94 blocked kNN join --------------------------------------------------
-  /** k-nearest-neighbor JOIN: for EVERY vector, its k most similar
-    * neighbors inside its blocking cell — the kNN-graph build that
-    * semantic-dedup (SemDeDup-style) and embedding-clustering pipelines
-    * run corpus-wide, as opposed to the single-query ANN paths (#43/44/83/89).
-    *
-    * Scale: the self-join is keyed by the blocking label (at 100 TB the
-    * IVF cell / LSH bucket — the same blocking [[graft.operators.Dedup.embedNearDup]]
-    * uses), so each task only scores within its block; the per-vector
-    * top-k is a window PARTITIONED BY the source vector (group size =
-    * block size, never the corpus), and WindowGroupLimit pushes the
-    * rank <= k filter below the exchange. No global sort anywhere.
-    */
   /** Spread the STREAMED side of a block pair join when the planner is
     * about to BROADCAST the other side. In that regime the join inserts
     * no exchange, so the CPU-quadratic pair enumeration inherits the
@@ -278,19 +266,94 @@ object Vectors {
     else aSide
   }
 
-  def knnJoin(embeddings: DataFrame, k: Int = 5): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm2}
-    val withNorm = embeddings.filter(kmValid).select(col("vec_id"), col("label"),
-      col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"))
+  /** The b-side shape of [[blockPairs]]: `(vec_id, label, v, n2)`. */
+  private[graft] def normed(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), col("label"), col("embedding").as("v"),
+      graft.functions.VectorFunctions.vecNorm2(col("embedding")).as("n2"))
+
+  /** The blocked pair-join core of the kNN / near-dup family: every
+    * a-side row `(vec_id, v, n2, <blockCol>, carry…)` meets the b-side
+    * rows `(vec_id, label, v, n2)` whose label equals its block column
+    * and whose id passes `idPred` (`=!=` for a directed graph, `<` for
+    * unordered pairs), scored by the 6-floored cosine of the
+    * strict-fold dot ([[graft.functions.DotProduct]]) — the same IEEE
+    * sequence as the oracles' [[cosSql]]. Emits `carry…, vec_a, vec_b,
+    * cosine`. `spreadSource` is the relation whose size estimate decides
+    * [[spreadIfBroadcastJoin]].
+    *
+    * Zero-norm rows (an all-zero embedding passes [[kmValid]]) are
+    * dropped from BOTH sides: their cosine is 0/0, which throws
+    * DIVIDE_BY_ZERO under ANSI mode and is NULL in DuckDB, where the
+    * oracles' `cosine >=` filters and okey top-k drop every such pair.
+    * Callers that derive centroids from the corpus do so before calling
+    * here, so those rows still count toward the centroids, as in the
+    * oracles. No other validity filter is applied: each caller keeps its
+    * own ([[kmValid]] for the kNN family, none for embedNearDup).
+    *
+    * Scale: the self-join is keyed by the blocking label (at 100 TB the
+    * IVF cell / LSH bucket), so each task only scores within its block.
+    */
+  private[graft] def blockPairs(aSide: DataFrame, bSide: DataFrame, spreadSource: DataFrame,
+                                blockCol: String, idPred: (Column, Column) => Column,
+                                carry: Seq[String] = Nil): DataFrame = {
+    val nonZero = col("n2") =!= 0d
+    spreadIfBroadcastJoin(aSide.filter(nonZero), spreadSource).as("a")
+      .join(bSide.filter(nonZero).as("b"),
+        col(s"a.$blockCol") === col("b.label") && idPred(col("a.vec_id"), col("b.vec_id")))
+      .select(carry.map(c => col(s"a.$c").as(c)) ++ Seq(
+        col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+        fl(graft.functions.VectorFunctions.vecDot(col("a.v"), col("b.v")) /
+          (sqrt(col("a.n2")) * sqrt(col("b.n2"))), OKEY_COS_SCALE).as("cosine")): _*)
+  }
+
+  /** Per-vector top-k over [[blockPairs]] output: `nn_rank` by
+    * (cosine DESC, vec_b ASC), a total order within a vec_a. The window
+    * is PARTITIONED BY the source vector (group size = block size, never
+    * the corpus), and WindowGroupLimit pushes the rank <= k filter below
+    * the exchange. No global sort anywhere.
+    */
+  private[graft] def topKPerVec(pairs: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_a").orderBy(col("cosine").desc, col("vec_b").asc)
-    spreadIfBroadcastJoin(withNorm, withNorm).as("a")
-      .join(withNorm.as("b"),
-        col("a.label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .withColumn("nn_rank", row_number().over(w).cast("long"))
+    pairs.withColumn("nn_rank", row_number().over(w).cast("long"))
       .filter(col("nn_rank") <= k)
+  }
+
+  /** k-nearest-neighbor JOIN: for EVERY vector, its k most similar
+    * neighbors inside its blocking cell — the kNN-graph build that
+    * semantic-dedup (SemDeDup-style) and embedding-clustering pipelines
+    * run corpus-wide, as opposed to the single-query ANN paths (#43/44/83/89).
+    * [[knnGraph]] without its block key.
+    */
+  def knnJoin(embeddings: DataFrame, k: Int = 5): DataFrame =
+    knnGraph(embeddings, k).drop("label")
+
+  /** Per-label centroids `(label, mean vector)` in label order — the
+    * coarse quantizer the multi-probe joins rank against. ONE tiny
+    * collect, bounded by the label/cell cardinality. Null-label vectors
+    * can't join any block (SQL null-equality already drops them from the
+    * b-side); they must not become a null centroid group either.
+    */
+  private[graft] def labelCentroids(embeddings: DataFrame): Array[(Int, Array[Double])] =
+    embeddings.filter(col("label").isNotNull).groupBy("label")
+      .agg(graft.functions.VectorFunctions.vecSum(col("embedding"), DIM).as("sv"),
+        count(lit(1)).as("nv"))
+      .select(col("label"), transform(col("sv"), x => x / col("nv").cast("double")).as("cvec"))
+      .collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+
+  /** The multi-probe tail: each vector of `embeddings` probes its own
+    * label plus the labels of `topLabels` (an array column over the same
+    * frame), then the pair join and top-k of [[blockPairs]] /
+    * [[topKPerVec]]. The b-side moves keyed by its home label exactly as
+    * in the single-block join, so cost scales by nProbe × block size.
+    */
+  private[graft] def probeJoin(embeddings: DataFrame, topLabels: Column, k: Int): DataFrame = {
+    val aSide = embeddings.select(col("vec_id"),
+      col("embedding").as("v"), graft.functions.VectorFunctions.vecNorm2(col("embedding")).as("n2"),
+      explode(array_distinct(concat(array(col("label")), topLabels))).as("probe_label"))
+    topKPerVec(blockPairs(aSide, normed(embeddings), embeddings, "probe_label", _ =!= _), k)
   }
 
   /** #97 multi-probe kNN join: each vector scores against its `nProbe`
@@ -302,28 +365,18 @@ object Vectors {
     * ONE tiny collect (annIvf's coarse quantizer, reused here as
     * LITERALS), so probe assignment is a zero-shuffle in-row projection
     * over the scan: score the centroids, sort, slice, explode. The join
-    * then replicates each vector into at most `nProbe` blocks (the b-side
-    * moves keyed by its home label exactly as the single-block join), so
-    * cost scales by nProbe × block size, never the corpus.
+    * then replicates each vector into at most `nProbe` blocks
+    * ([[probeJoin]]), so cost scales by nProbe × block size, never the
+    * corpus.
     */
-  def knnJoinMultiProbe(embeddings0: DataFrame, k: Int = 5, nProbe: Int = 2,
-                        unrolled: Boolean = false): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm2, vecSum}
+  def knnJoinMultiProbe(embeddings0: DataFrame, k: Int = 5, nProbe: Int = 2): DataFrame = {
     // Valid vectors only, matching the oracles' vsrc CTE: an invalid row
     // would hard-throw in vec_sum (wrong dim) or skew the centroid mean
     // (vec_sum's per-slot null skip over the FULL row count vs DuckDB
     // AVG's non-null denominator) — the graph family's input contract is
     // the warehouse's valid-vector relation, same as the geo/kmeans path.
     val embeddings = embeddings0.filter(kmValid)
-    // null-label vectors can't join any block (SQL null-equality already
-    // drops them from the b-side); they must not become a null centroid
-    // group either
-    val cents = embeddings.filter(col("label").isNotNull).groupBy("label")
-      .agg(vecSum(col("embedding"), DIM).as("sv"), count(lit(1)).as("nv"))
-      .select(col("label"), transform(col("sv"), x => x / col("nv").cast("double")).as("cvec"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1))
-      .sortBy(_._1)
+    val cents = labelCentroids(embeddings)
     // no blocks at all (empty corpus): the probe array would be a
     // zero-width VOID literal that analysis rejects — and with no rows
     // the multi-probe graph IS the single-block graph (empty)
@@ -335,51 +388,23 @@ object Vectors {
     // rank probes differently per engine / partitioning and change the
     // candidate set.
     //
-    // Deploy path: the fused codegen'd TopProbeLabels expression — the
-    // centroid matrix is ONE codegen reference object, so plan size is
-    // O(1) in the cell count C and scoring is a compiled O(C·dim) loop.
-    // `unrolled = true` keeps the original one-literal-struct-per-cell
-    // array_sort formulation alive purely as the spec twin that pins the
-    // expression's bit-exact equivalence (it is O(C) plan nodes and
-    // interpreted per-row HOF eval — a scale-killer at FAISS cell counts).
-    val topLabels = if (unrolled) {
-      val scoredCents = cents.map { case (l, cv) =>
-        struct((-fl(cosTo(typedLit(cv), col("embedding")), 6)).as("neg"), lit(l).as("lbl"))
-      }
-      transform(
-        slice(array_sort(array(scoredCents.toIndexedSeq: _*)), 1, nProbe),
-        x => x.getField("lbl"))
-    } else {
-      val labelArr = cents.map(_._1)
-      val centFlat = cents.flatMap(_._2)
-      // a NULL vector nulls the expression; the unrolled form's all-null
-      // scores degenerate to label-asc ranking, restored here by coalesce
-      coalesce(
-        graft.functions.VectorFunctions.topProbeLabels(
-          col("embedding"), DIM, labelArr, centFlat, nProbe),
-        typedLit(labelArr.take(math.min(nProbe, labelArr.length)).toSeq))
-    }
-    val probeLabels = array_distinct(concat(array(col("label")), topLabels))
-    val withNorm = embeddings.select(col("vec_id"), col("label"),
-      col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"))
-    val aSide = embeddings.select(col("vec_id"),
-      col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"),
-      explode(probeLabels).as("probe_label"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_a").orderBy(col("cosine").desc, col("vec_b").asc)
-    spreadIfBroadcastJoin(aSide, embeddings).as("a")
-      .join(withNorm.as("b"),
-        col("a.probe_label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .withColumn("nn_rank", row_number().over(w).cast("long"))
-      .filter(col("nn_rank") <= k)
+    // The fused codegen'd TopProbeLabels expression: the centroid matrix
+    // is ONE codegen reference object, so plan size is O(1) in the cell
+    // count C and scoring is a compiled O(C·dim) loop. DedupVectorsSpec
+    // pins it bit-exact against the one-literal-struct-per-cell
+    // array_sort formulation (O(C) plan nodes, interpreted per-row HOF
+    // eval — a scale-killer at FAISS cell counts).
+    val labelArr = cents.map(_._1)
+    // a NULL vector nulls the expression; the literal formulation's
+    // all-null scores degenerate to label-asc ranking, restored here by
+    // coalesce
+    val topLabels = coalesce(
+      graft.functions.VectorFunctions.topProbeLabels(
+        col("embedding"), DIM, labelArr, cents.flatMap(_._2), nProbe),
+      typedLit(labelArr.take(math.min(nProbe, labelArr.length)).toSeq))
+    probeJoin(embeddings, topLabels, k)
   }
 
-  /** `src` / `prefixCtes` parameterize the replay over a derived source
-    * relation (the geo variant feeds the k-means-relabeled corpus through
-    * the identical probe/pair/top-k chain).
-    */
   /** Validity predicate for the graph-family oracles' `vsrc` CTE — the
     * DuckDB twin of the Spark sides' [[kmValid]] entry filter.
     */
@@ -427,10 +452,8 @@ object Vectors {
     * nothing. NULL-cosine pairs (a zero-norm embedding passes
     * `vecValidSql`; DuckDB x/0.0 is NULL) get a NULL okey and are
     * DROPPED by construction (max() ignores NULLs and `okey >= kth` is
-    * never true for NULL) — same as the Spark side, where the
-    * `cosine DESC` sort puts NULL last and the row never enters top-k
-    * unless a block has < k non-null candidates, which the synthetic and
-    * reference corpora (no zero-norm vectors) never produce.
+    * never true for NULL) — the Spark side drops the same pairs by
+    * removing zero-norm rows from both sides of [[blockPairs]].
     */
   private def twoStageTopKSql(k: Int, extraCols: Seq[String] = Nil): String = {
     require(k >= 1, s"top-k oracle needs k >= 1, got $k")
@@ -470,10 +493,43 @@ object Vectors {
   private[graft] val OKEY_COS_SCALE: Int = 6
   private[graft] val OKEY_ID_BOUND: Long = 1L << 40
 
+  /** 6-floored cosine of the `embedding` columns of aliases `a` and `b`,
+    * strict left-fold dots — the DuckDB twin of [[blockPairs]]' score.
+    */
+  private[graft] def cosSql(a: String, b: String): String =
+    flSql(cosToSql(s"$a.embedding", s"$b.embedding"), OKEY_COS_SCALE)
+
+  /** `SELECT carry…, vec_a, vec_b, cosine` over the label-blocked self
+    * join of `src` — the DuckDB twin of [[blockPairs]] for the
+    * single-block joins (`idOp` is `<>` or `<`).
+    */
+  private[graft] def blockPairsSql(src: String, idOp: String, carry: String = ""): String =
+    s"SELECT ${carry}a.vec_id AS vec_a, b.vec_id AS vec_b,  ${cosSql("a", "b")} AS cosine" +
+      s" FROM $src a JOIN $src b  ON a.label = b.label AND a.vec_id $idOp b.vec_id"
+
+  /** The multi-probe oracles' shared tail: `probes` = the rows of
+    * `rankedProbes` (a `SELECT vec_id, … AS probe_label`) plus each
+    * vector's own label, then the probe-keyed `pairs` of `src` and the
+    * bounded top-k.
+    */
+  private def probePairsTopKSql(rankedProbes: String, src: String, k: Int): String =
+    s""" probes AS (
+       |  $rankedProbes
+       |  UNION SELECT vec_id, label AS probe_label FROM $src),
+       | pairs AS (
+       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, p.probe_label AS probe_label,
+       |   ${cosSql("a", "b")} AS cosine
+       |  FROM probes p
+       |  JOIN $src a ON a.vec_id = p.vec_id
+       |  JOIN $src b ON b.label = p.probe_label AND b.vec_id <> a.vec_id)
+       | ${twoStageTopKSql(k)}""".stripMargin.replace("\n", "")
+
+  /** `src` / `prefixCtes` parameterize the replay over a derived source
+    * relation (the geo variant feeds the k-means-relabeled corpus through
+    * the identical probe/pair/top-k chain).
+    */
   def knnJoinMultiProbeSql(k: Int = 5, nProbe: Int = 2, src0: String = "embeddings",
                            prefixCtes: String = ""): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
     // raw `embeddings` goes through the validity CTE (the geo caller's
     // relabeled prefix relation is valid by construction)
     val (src, validCte) =
@@ -491,16 +547,7 @@ object Vectors {
        |   ROW_NUMBER() OVER (PARTITION BY e.vec_id
        |     ORDER BY ${flSql(cosToSql("c.cvec", "e.embedding"), 6)} DESC, c.label ASC) AS pr
        |  FROM $src e CROSS JOIN cvecs c),
-       | probes AS (
-       |  SELECT vec_id, probe_label FROM ranked WHERE pr <= $nProbe
-       |  UNION SELECT vec_id, label AS probe_label FROM $src),
-       | pairs AS (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, p.probe_label AS probe_label,
-       |   ${flSql(s"${dot("a", "b")} / (sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))", 6)} AS cosine
-       |  FROM probes p
-       |  JOIN $src a ON a.vec_id = p.vec_id
-       |  JOIN $src b ON b.label = p.probe_label AND b.vec_id <> a.vec_id)
-       | ${twoStageTopKSql(k)}""".stripMargin.replace("\n", "")
+       |${probePairsTopKSql(s"SELECT vec_id, probe_label FROM ranked WHERE pr <= $nProbe", src, k)}""".stripMargin.replace("\n", "")
   }
 
   /** #122 geometry-blocked kNN join — the deploy reality of the blocked
@@ -624,101 +671,52 @@ object Vectors {
     * replays the full hierarchy in DuckDB.
     */
   def knnJoinMultiProbeHier(embeddings0: DataFrame, k: Int = 5, nProbe: Int = 2,
-                            superProbe: Int = 2, stashOracle: Boolean = false,
-                            unrolled: Boolean = false): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm2, vecSum}
-    import graft.OracleStash.{dl, dlist}
+                            superProbe: Int = 2, stashOracle: Boolean = false): DataFrame = {
+    import graft.OracleStash.dlist
     val embeddings = embeddings0.filter(kmValid) // see knnJoinMultiProbe
-    val cents = embeddings.filter(col("label").isNotNull).groupBy("label")
-      .agg(vecSum(col("embedding"), DIM).as("sv"), count(lit(1)).as("nv"))
-      .select(col("label"), transform(col("sv"), x => x / col("nv").cast("double")).as("cvec"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
+    val cents = labelCentroids(embeddings)
     if (cents.isEmpty) return knnJoin(embeddings, k)
-    val nSup = math.ceil(math.sqrt(cents.length.toDouble)).toInt
-    // driver Lloyd on the C cell-centroid vectors = trainPqCodebook with
-    // one subspace (same init/iteration/tie contract), S supers
-    val supFlat = trainPqCodebook(cents.map(_._2), DIM, m = 1, k = nSup, iters = 3)
-    val supCents = Array.tabulate(nSup)(j => java.util.Arrays.copyOfRange(supFlat, j * DIM, (j + 1) * DIM))
-    def nearestSup(v: Array[Double]): Int = {
-      var best = 0; var bd = Double.MaxValue; var c = 0
-      while (c < nSup) {
-        var d = 0d; var j = 0
-        while (j < DIM) { val t = v(j) - supCents(c)(j); d += t * t; j += 1 }
-        if (d < bd) { bd = d; best = c }
-        c += 1
-      }
-      best
-    }
-    val cellSup: Array[Int] = cents.map(c => nearestSup(c._2))
+    val (supFlat, cellSup) = hierSupers(cents)
+    val nSup = supFlat.length / DIM
     if (stashOracle) {
-      val supVals = supCents.toIndexedSeq.zipWithIndex
+      val supVals = supFlat.grouped(DIM).toIndexedSeq.zipWithIndex
         .map { case (v, j) => s"($j, ${dlist(v.toSeq)})" }.mkString(", ")
       val cellVals = cents.toIndexedSeq.zipWithIndex
         .map { case ((l, cv), ci) => s"(${cellSup(ci)}, $l, ${dlist(cv.toSeq)})" }.mkString(", ")
       graft.OracleStash.put("v_knn_join_mph", knnJoinMphOracleSql(supVals, cellVals, k, nProbe, superProbe))
     }
-    val withNorm = embeddings.select(col("vec_id"), col("label"),
-      col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"))
-    // Deploy path: BOTH ranking stages fused into the codegen'd
-    // TopProbeLabelsHier expression — supers, cell→super map and cell
-    // centroids are codegen reference objects, so plan size is O(1) in C
-    // and the per-row cost is the compiled O((S + superProbe·C/S)·dim)
-    // two-stage loop. `unrolled = true` keeps the original formulation
+    // BOTH ranking stages fused into the codegen'd TopProbeLabelsHier
+    // expression — supers, cell→super map and cell centroids are codegen
+    // reference objects, so plan size is O(1) in C and the per-row cost
+    // is the compiled O((S + superProbe·C/S)·dim) two-stage loop.
+    // DedupVectorsSpec pins it bit-exact against the literal formulation
     // (per-super literal structs + one when-guarded literal entry per
-    // cell) alive as the spec twin pinning bit-exact equivalence; its
-    // design notes — centroids must live in expressions not data, the
-    // super choice must be materialized once as a column because the
-    // interpreted projection has no CSE — are retained in git history
-    // and superseded by the fused expression.
-    val aSide = if (unrolled) {
-      val supScored = supCents.toIndexedSeq.zipWithIndex.map { case (sc, j) =>
-        struct((-fl(cosTo(typedLit(sc.toSeq), col("embedding")), 6)).as("neg"), lit(j).as("sid"))
-      }
-      val topSupers = transform(
-        slice(array_sort(array(supScored: _*)), 1, superProbe), x => x.getField("sid"))
-      def scoredCand(sup: Column) = filter(
-        array(cents.toIndexedSeq.zipWithIndex.map { case ((l, cv), ci) =>
-          when(array_contains(sup, lit(cellSup(ci))),
-            struct((-fl(cosTo(typedLit(cv.toSeq), col("embedding")), 6)).as("neg"),
-              lit(l).as("lbl")))
-        }: _*), c => c.isNotNull)
-      def topLabels(sup: Column) = transform(
-        slice(array_sort(scoredCand(sup)), 1, nProbe), x => x.getField("lbl"))
-      def probeLabels(sup: Column) = array_distinct(concat(array(col("label")), topLabels(sup)))
-      embeddings
-        .select(col("vec_id"), col("label"), col("embedding"), topSupers.as("_sup"))
-        .select(col("vec_id"),
-          col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"),
-          explode(probeLabels(col("_sup"))).as("probe_label"))
-    } else {
-      val labelArr = cents.map(_._1)
-      val cellFlat = cents.flatMap(_._2)
-      // a NULL vector nulls the expression; the unrolled form's all-null
-      // scores pick supers {0..superProbe-1} (sid asc) then member cells
-      // label-asc — the same list, precomputed here as the coalesce arm
-      val sp = math.min(superProbe, nSup)
-      val nullFallback = cents.indices
-        .filter(ci => cellSup(ci) < sp).take(nProbe).map(ci => cents(ci)._1)
-      val topLabels = coalesce(
-        graft.functions.VectorFunctions.topProbeLabelsHier(
-          col("embedding"), DIM, supFlat, labelArr, cellSup, cellFlat, nProbe, superProbe),
-        typedLit(nullFallback))
-      val probeLabels = array_distinct(concat(array(col("label")), topLabels))
-      embeddings.select(col("vec_id"),
-        col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"),
-        explode(probeLabels).as("probe_label"))
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_a").orderBy(col("cosine").desc, col("vec_b").asc)
-    spreadIfBroadcastJoin(aSide, embeddings).as("a")
-      .join(withNorm.as("b"),
-        col("a.probe_label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .withColumn("nn_rank", row_number().over(w).cast("long"))
-      .filter(col("nn_rank") <= k)
+    // cell).
+    //
+    // a NULL vector nulls the expression; the literal formulation's
+    // all-null scores pick supers {0..superProbe-1} (sid asc) then member
+    // cells label-asc — the same list, precomputed here as the coalesce arm
+    val sp = math.min(superProbe, nSup)
+    val nullFallback = cents.indices
+      .filter(ci => cellSup(ci) < sp).take(nProbe).map(ci => cents(ci)._1)
+    val topLabels = coalesce(
+      graft.functions.VectorFunctions.topProbeLabelsHier(
+        col("embedding"), DIM, supFlat, cents.map(_._1), cellSup, cents.flatMap(_._2),
+        nProbe, superProbe),
+      typedLit(nullFallback))
+    probeJoin(embeddings, topLabels, k)
+  }
+
+  /** The hierarchy's super level over the cell centroids `cents`: a
+    * driver Lloyd on the C cell-centroid vectors = trainPqCodebook with
+    * one subspace (same init/iteration/tie contract), S = ceil(sqrt(C))
+    * supers, flattened; and each cell's nearest super (the PQ encode
+    * rule: first-min squared L2).
+    */
+  private[graft] def hierSupers(cents: Array[(Int, Array[Double])]): (Array[Double], Array[Int]) = {
+    val nSup = math.ceil(math.sqrt(cents.length.toDouble)).toInt
+    val supFlat = trainPqCodebook(cents.map(_._2), DIM, m = 1, k = nSup, iters = 3)
+    (supFlat, cents.map(c => pqEncodeLocal(c._2, supFlat, DIM, 1, nSup)(0)))
   }
 
   /** DuckDB twin of the hierarchy, from the literal-inlined trained
@@ -726,9 +724,7 @@ object Vectors {
     * ranking → member-cell ranking → probes → pairs → top-k.
     */
   private def knnJoinMphOracleSql(supVals: String, cellVals: String,
-                                  k: Int, nProbe: Int, superProbe: Int): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
+                                  k: Int, nProbe: Int, superProbe: Int): String =
     s"""WITH vsrc AS (SELECT vec_id, label, embedding FROM embeddings WHERE $vecValidSql),
        | sup AS (SELECT * FROM (VALUES $supVals) AS t(sid, svec)),
        | cells AS (SELECT * FROM (VALUES $cellVals) AS t(sid, lbl, cvec)),
@@ -744,63 +740,30 @@ object Vectors {
        |  FROM vsrc e
        |  JOIN sscore t ON t.vec_id = e.vec_id AND t.sr <= $superProbe
        |  JOIN cells c ON c.sid = t.sid),
-       | probes AS (
-       |  SELECT vec_id, lbl AS probe_label FROM cscore WHERE cr <= $nProbe
-       |  UNION SELECT vec_id, label AS probe_label FROM vsrc),
-       | pairs AS (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, p.probe_label AS probe_label,
-       |   ${flSql(s"${dot("a", "b")} / (sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))", 6)} AS cosine
-       |  FROM probes p
-       |  JOIN vsrc a ON a.vec_id = p.vec_id
-       |  JOIN vsrc b ON b.label = p.probe_label AND b.vec_id <> a.vec_id)
-       | ${twoStageTopKSql(k)}""".stripMargin.replace("\n", "")
-  }
+       |${probePairsTopKSql(s"SELECT vec_id, lbl AS probe_label FROM cscore WHERE cr <= $nProbe", "vsrc", k)}""".stripMargin.replace("\n", "")
 
-  def knnJoinSql(k: Int = 5): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    s"""WITH vsrc AS (SELECT vec_id, label, embedding FROM embeddings WHERE $vecValidSql),
-       | pairs AS (
-       | SELECT a.label AS probe_label, a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  ${flSql(s"${dot("a", "b")} / (sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))", 6)} AS cosine
-       | FROM vsrc a JOIN vsrc b
-       |  ON a.label = b.label AND a.vec_id <> b.vec_id)
-       | ${twoStageTopKSql(k)}""".stripMargin.replace("\n", "")
-  }
+  def knnJoinSql(k: Int = 5): String = blockGraphSql(k, "probe_label", Nil)
 
   /** The blocked kNN graph WITH its block key — the stored-MV form of
     * [[knnJoin]] (at deploy the graph is partitioned by `label`, which is
     * exactly what makes [[knnGraphIncrement]]'s surgical maintenance a
-    * partition overwrite). Same join/rank contract as knnJoin; `label`
-    * rides along from the a-side (functionally determined by vec_a).
+    * partition overwrite). `label` rides along from the a-side
+    * (functionally determined by vec_a).
     */
   def knnGraph(embeddings: DataFrame, k: Int = 5): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm2}
-    val withNorm = embeddings.filter(kmValid).select(col("vec_id"), col("label"),
-      col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_a").orderBy(col("cosine").desc, col("vec_b").asc)
-    spreadIfBroadcastJoin(withNorm, withNorm).as("a")
-      .join(withNorm.as("b"),
-        col("a.label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.label").as("label"),
-        col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .withColumn("nn_rank", row_number().over(w).cast("long"))
-      .filter(col("nn_rank") <= k)
+    val e = normed(embeddings.filter(kmValid))
+    topKPerVec(blockPairs(e, e, e, "label", _ =!= _, carry = Seq("label")), k)
   }
 
-  def knnGraphSql(k: Int = 5): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
+  def knnGraphSql(k: Int = 5): String = blockGraphSql(k, "label", Seq("label"))
+
+  /** Shared oracle of [[knnJoinSql]] / [[knnGraphSql]]: the block key is
+    * emitted as `labelAs`, and carried to the output for `extraCols`.
+    */
+  private def blockGraphSql(k: Int, labelAs: String, extraCols: Seq[String]): String =
     s"""WITH vsrc AS (SELECT vec_id, label, embedding FROM embeddings WHERE $vecValidSql),
-       | pairs AS (
-       | SELECT a.label AS label, a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  ${flSql(s"${dot("a", "b")} / (sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))", 6)} AS cosine
-       | FROM vsrc a JOIN vsrc b
-       |  ON a.label = b.label AND a.vec_id <> b.vec_id)
-       | ${twoStageTopKSql(k, extraCols = Seq("label"))}""".stripMargin.replace("\n", "")
-  }
+       | pairs AS ( ${blockPairsSql("vsrc", "<>", s"a.label AS $labelAs, ")})
+       | ${twoStageTopKSql(k, extraCols)}""".stripMargin.replace("\n", "")
 
   /** #123 incremental maintenance of the blocked kNN graph — the
     * incremental-MV discipline ([[mergeKmeansState]],
@@ -1462,9 +1425,6 @@ object Vectors {
     * zero joins, zero windows. iters+1 passes over the corpus total, the
     * canonical distributed-k-means shape.
     */
-  /** A valid member vector for the k-means family (mirrored in the e CTE
-    * of every oracle sharing [[kmeansCtes]]).
-    */
   /** Embedding-only validity — for relations that carry no vec_id (e.g.
     * a raw (ts, embedding) stream): non-null, right dimension, no null
     * elements.
@@ -1473,6 +1433,9 @@ object Vectors {
     col("embedding").isNotNull && size(col("embedding")) === DIM &&
       size(filter(col("embedding"), x => x.isNull)) === 0
 
+  /** A valid member vector for the k-means family (mirrored in the e CTE
+    * of every oracle sharing [[kmeansCtes]]).
+    */
   private[graft] def kmValid: Column = col("vec_id").isNotNull && embValid
 
   /** Fused assignment struct(cluster, dist) against `cent` — the

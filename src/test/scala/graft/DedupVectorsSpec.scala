@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Vectors}
+import graft.operators.EventSemantics.fl
 
 /** Invariant specs for the dedup suite, vector search, and multimodal
   * plumbing (oracle equality is covered by Verify + check.py; these pin
@@ -691,19 +693,54 @@ class DedupVectorsSpec extends SparkSpec {
     assert(Vectors.knnJoinGeo(invalid).count() == 0) // wrong dim -> kmValid drops it
   }
 
+  // The one-literal-per-cell array_sort formulations of the two probe
+  // rankings: the references the fused TopProbeLabels /
+  // TopProbeLabelsHier expressions must reproduce bit-for-bit. O(C) plan
+  // nodes and interpreted per-row HOF eval, so they live here only; both
+  // feed their probe-label column to the operators' own probe join.
+  private def negCos(cv: Seq[Double]): Column =
+    -fl(Vectors.cosTo(typedLit(cv), col("embedding")), 6)
+
+  private def mpUnrolled(df: DataFrame, k: Int, nProbe: Int): DataFrame = {
+    val e = df.filter(Vectors.kmValid)
+    val scored = Vectors.labelCentroids(e).toIndexedSeq.map { case (l, cv) =>
+      struct(negCos(cv.toSeq).as("neg"), lit(l).as("lbl"))
+    }
+    Vectors.probeJoin(e,
+      transform(slice(array_sort(array(scored: _*)), 1, nProbe), x => x.getField("lbl")), k)
+  }
+
+  private def mphUnrolled(df: DataFrame, k: Int, nProbe: Int, superProbe: Int): DataFrame = {
+    val e = df.filter(Vectors.kmValid)
+    val cents = Vectors.labelCentroids(e).toIndexedSeq
+    val (supFlat, cellSup) = Vectors.hierSupers(cents.toArray)
+    val supScored = supFlat.grouped(64).toIndexedSeq.zipWithIndex.map { case (sc, j) =>
+      struct(negCos(sc.toSeq).as("neg"), lit(j).as("sid"))
+    }
+    val topSupers = transform(
+      slice(array_sort(array(supScored: _*)), 1, superProbe), x => x.getField("sid"))
+    val cand = filter(array(cents.zipWithIndex.map { case ((l, cv), ci) =>
+      when(array_contains(col("_sup"), lit(cellSup(ci))),
+        struct(negCos(cv.toSeq).as("neg"), lit(l).as("lbl")))
+    }: _*), c => c.isNotNull)
+    // the super choice is one column, computed once: the interpreted
+    // projection has no common-subexpression elimination
+    Vectors.probeJoin(e.withColumn("_sup", topSupers),
+      transform(slice(array_sort(cand), 1, nProbe), x => x.getField("lbl")), k)
+  }
+
   test("fused probe expressions ≡ unrolled formulations on the real corpus (flat + hier)") {
     // the deploy path (TopProbeLabels / TopProbeLabelsHier codegen'd
     // expressions, O(1) plan size in C) must reproduce the original
     // one-literal-per-cell array_sort plans bit-for-bit
     val flatExpr = Vectors.knnJoinMultiProbe(emb, k = 5, nProbe = 2)
       .collect().map(_.toSeq).toSet
-    val flatUnrolled = Vectors.knnJoinMultiProbe(emb, k = 5, nProbe = 2, unrolled = true)
-      .collect().map(_.toSeq).toSet
+    val flatUnrolled = mpUnrolled(emb, k = 5, nProbe = 2).collect().map(_.toSeq).toSet
     assert(flatExpr === flatUnrolled)
     val hierExpr = Vectors.knnJoinMultiProbeHier(emb, k = 5, nProbe = 2, superProbe = 2)
       .collect().map(_.toSeq).toSet
-    val hierUnrolled = Vectors.knnJoinMultiProbeHier(emb, k = 5, nProbe = 2, superProbe = 2,
-      unrolled = true).collect().map(_.toSeq).toSet
+    val hierUnrolled = mphUnrolled(emb, k = 5, nProbe = 2, superProbe = 2)
+      .collect().map(_.toSeq).toSet
     assert(hierExpr === hierUnrolled)
   }
 
@@ -716,9 +753,8 @@ class DedupVectorsSpec extends SparkSpec {
     //  - a NULL ELEMENT nulls dot(q,q) → same degeneration, but through
     //    the expression's own kernel (array non-null)
     //  - a NULL label keeps its a-side probes but never matches b-side
-    // (zero-NORM vectors are OUTSIDE the operator contract: under ANSI
-    // the downstream join cosine's 0/0 throws DIVIDE_BY_ZERO on either
-    // probe-assignment path)
+    // (zero-NORM vectors are dropped by the pair join itself on both
+    // paths — see the zero-norm test below)
     def vec(deg: Double): Seq[java.lang.Float] = {
       val r = math.toRadians(deg)
       Seq.tabulate[java.lang.Float](64)(i =>
@@ -743,15 +779,60 @@ class DedupVectorsSpec extends SparkSpec {
     for (np <- Seq(1, 2, 5)) {
       val fe = Vectors.knnJoinMultiProbe(df, k = 3, nProbe = np)
         .collect().map(_.toSeq).toSet
-      val fu = Vectors.knnJoinMultiProbe(df, k = 3, nProbe = np, unrolled = true)
-        .collect().map(_.toSeq).toSet
+      val fu = mpUnrolled(df, k = 3, nProbe = np).collect().map(_.toSeq).toSet
       assert(fe === fu, s"flat mismatch at nProbe=$np")
       val he = Vectors.knnJoinMultiProbeHier(df, k = 3, nProbe = np, superProbe = 1)
         .collect().map(_.toSeq).toSet
-      val hu = Vectors.knnJoinMultiProbeHier(df, k = 3, nProbe = np, superProbe = 1,
-        unrolled = true).collect().map(_.toSeq).toSet
+      val hu = mphUnrolled(df, k = 3, nProbe = np, superProbe = 1).collect().map(_.toSeq).toSet
       assert(he === hu, s"hier mismatch at nProbe=$np")
     }
+  }
+
+  test("zero-norm vector: dropped from every pair join instead of aborting it") {
+    // an all-zero embedding passes kmValid and the oracles' validity CTE;
+    // its cosine is 0/0 — DIVIDE_BY_ZERO under ANSI, NULL (so dropped) in
+    // DuckDB. With it added, the single-block joins must emit exactly the
+    // edges of the corpus without it.
+    val s = spark
+    import s.implicits._
+    val base = emb.select("vec_id", "label", "embedding")
+    val zeroId = base.agg(max("vec_id")).head.getLong(0) + 1
+    val withZero = base.unionByName(
+      Seq((zeroId, 0, Array.fill(64)(0f))).toDF("vec_id", "label", "embedding"))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(Vectors.knnJoin(withZero)) === rows(Vectors.knnJoin(base)))
+    assert(rows(Vectors.knnGraph(withZero)) === rows(Vectors.knnGraph(base)))
+    assert(rows(Dedup.embedNearDup(withZero, minCos = -1.0)) ===
+      rows(Dedup.embedNearDup(base, minCos = -1.0)))
+    // the zero vector still counts toward its label's centroid (as in the
+    // oracles), so multi-probe edges may move — but it is never emitted
+    for (g <- Seq(Vectors.knnJoinMultiProbe(withZero), Vectors.knnJoinMultiProbeHier(withZero))) {
+      val out = g.select("vec_a", "vec_b").collect()
+      assert(out.nonEmpty)
+      assert(!out.exists(r => r.getLong(0) == zeroId || r.getLong(1) == zeroId))
+    }
+  }
+
+  test("pair-join core: same rows on the shuffle join and on the broadcast + spread path") {
+    // spreadIfBroadcastJoin repartitions the streamed side only when the
+    // other side is below the broadcast threshold; the rows must not
+    // depend on which side of that decision the session lands on
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    def run(thresh: String): Seq[Set[Seq[Any]]] = {
+      spark.conf.set(key, thresh)
+      val graphs = Seq(Vectors.knnJoin(emb), Vectors.knnGraph(emb),
+        Vectors.knnJoinMultiProbe(emb), Dedup.embedNearDup(emb))
+      val spread = graphs.map(_.queryExecution.executedPlan.toString.contains("REPARTITION_BY_NUM"))
+      assert(spread.forall(_ == (thresh != "-1")), s"threshold $thresh: spread $spread")
+      graphs.map(_.collect().map(_.toSeq).toSet)
+    }
+    try {
+      val shuffled = run("-1")
+      val spread = run((50L * 1024 * 1024).toString)
+      assert(shuffled.forall(_.nonEmpty))
+      assert(shuffled === spread)
+    } finally spark.conf.set(key, prev)
   }
 
   test("residual PQ: lower reconstruction error than plain PQ at equal code size, recall no worse") {
